@@ -1,46 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC explicitly, not via build.sbt's forked -D flag: the NTZ
-      // events cast (Relational.events) is value-preserving only
-      // under a UTC session — an entry point launched outside the
-      // sbt fork (spark-submit) must not silently shift event time
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Scale-run knobs (defaults preserve the certified sf0.1 protocol
-    // exactly): SPARK_GRAFT_SESSION_CONF="k=v;k=v" sets session confs
-    // (e.g. graft.neardup.n / graft.pq.dim for a derived corpus);
-    // SPARK_GRAFT_SKIP="name,name" excludes queries — ANNOUNCED in
-    // the total line's "skipped" list, never silent (the only
-    // intended use is the declared-quadratic small-SF validators,
-    // e.g. d03, on a ×K corpus); SPARK_GRAFT_PASSES=1 drops the
-    // second steady pass for long scale runs ("passes" ships in the
-    // total line so a reader knows min-of-how-many produced it).
-    sys.env.get("SPARK_GRAFT_SESSION_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    val skipped = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
-    // SPARK_GRAFT_ONLY="name,name" restricts the run to the named
-    // queries — the scale-PROBE knob (e.g. timing just the measured
-    // superlinear tail at ×64 without paying a full-suite pass).
-    // Announced in the JSON ("only" list) so a probe artifact can
-    // never masquerade as a full-registry run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val missing = names -- SparkEntry.queries.keySet
-      require(missing.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${missing.toSeq.sorted.mkString(",")}")
-    }
+    // exactly; session confs and the ONLY/SKIP filters are Harness's):
+    // SPARK_GRAFT_SKIP is ANNOUNCED in the total line's "skipped"
+    // list, never silent (the only intended use is the
+    // declared-quadratic small-SF validators, e.g. d03, on a ×K
+    // corpus); SPARK_GRAFT_ONLY — the scale-PROBE knob, e.g. timing
+    // just the measured superlinear tail at ×64 without paying a
+    // full-suite pass — is announced in the JSON ("only" list) so a
+    // probe artifact can never masquerade as a full-registry run;
+    // SPARK_GRAFT_PASSES=1 drops the second steady pass for long
+    // scale runs ("passes" ships in the total line so a reader knows
+    // min-of-how-many produced it).
+    val sel = Harness.select()
+    val (skipped, only) = (sel.skip, sel.only)
+    val spark = Harness.session()
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     // SPARK_GRAFT_CONSUME=collect drives every timed query through
     // .collect() instead of .count() — the prune-hidden-family probe:
@@ -69,22 +45,6 @@ object Bench {
       case "write" => df.write.mode("overwrite").parquet(writeSink); ()
       case _ => df.count(); ()
     }
-    val baselineSet = Set(
-      "d01_exact_dedup", "d02_dup_groups", "d03_ngram_jaccard",
-      "d04_minhash_lsh", "d05_simhash_pairs", "e01_hourly",
-      "e02_sessions", "e03_top_users", "m01_media_meta",
-      "m02_decode_features", "m03_frames", "q01_pricing_summary",
-      "q02_revenue_forecast", "q03_top_revenue_orders",
-      "q04_region_nation_revenue", "q05_top_orders_per_customer",
-      "q06_first_order_per_customer", "q07_skip_take", "q08_takewhile",
-      "q09_distinct_consecutive", "q10_rollup", "q11_json_props",
-      "q12_monthly_orders", "q13_part_strings", "q14_running_spend",
-      "q15_count_distinct", "q16_chunked", "q17_anti_join",
-      "q18_semi_join", "q19_union", "q20_group_concat", "q21_cube",
-      "q22_intersect", "q23_except", "q24_approx_distinct",
-      "q25_quantiles", "s01_brute_topk", "s02_lsh_topk",
-      "s03_label_stats", "s04_native_topk", "t01_token_stats",
-      "t02_quality", "t03_langid", "t04_fingerprints")
     // Warmup pass: run every query once (codegen compilation, parquet
     // page-cache, executor-thread spin-up), then time TWO steady-state
     // passes and report the per-query minimum — JIT/GC/scheduler noise
@@ -92,52 +52,16 @@ object Bench {
     // the honest steady-state estimator. Caches are cleared between
     // queries in every pass so no query's .cache() skews a successor's
     // measurement.
-    // a renamed/removed query must not silently drop out of the
-    // judge's comparison prefix — drift fails loudly here, BEFORE the
-    // multi-minute warmup/steady passes, so a drifted registry costs
-    // seconds, not a discarded full run. Checked against the
-    // REGISTRY, not this run's results: an announced SPARK_GRAFT_SKIP
-    // (e.g. d03 on ×K scale runs) is not drift.
-    val missingBaseline = baselineSet -- SparkEntry.queries.keySet
-    require(missingBaseline.isEmpty,
-      s"baselineSet drift — queries gone from the registry: ${missingBaseline.toSeq.sorted.mkString(",")}")
     spark.range(1000).repartition(4).count()
-    // persisted-index setup (s11/s22, d18): build outside any timed
-    // pass. A failed build is survivable (the queries rebuild inline)
-    // but must be VISIBLE — a swallowed exception here surfaces only
-    // as an unexplained s11/d18 timing anomaly downstream.
-    try graft.ops.Similarity.ensureIvfIndex(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureIvfIndex failed — s11/s22 will pay index training inside their timed pass: $e") }
-    try graft.ops.Similarity.ensureSemanticIndex(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureSemanticIndex failed — d18 will pay index training inside its timed pass: $e") }
-    try graft.ops.Similarity.ensureCodebook(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureCodebook failed — the trained-codebook families (s06/s07/s31/s32/d12/d13/s13/c13) will pay Lloyd training inside their timed pass: $e") }
-    try graft.ops.Similarity.ensureTrainedIvfIndex(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureTrainedIvfIndex failed — s33/s34 will pay the index build inside their timed pass: $e") }
-    try graft.ops.TextAnalysis.ensureBpeModel(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureBpeModel failed — the tokenizer families (t18/t19/t20/c20/c22) will pay BPE training inside their timed pass: $e") }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => skipped.contains(n) }
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    ordered.foreach { case (_, fn) =>
-      try { consume(fn(spark, sfDir)) } catch { case _: Throwable => }
-      spark.catalog.clearCache()
-    }
+    Harness.setupArtifacts(spark, sfDir, "bench")
+    val ordered = sel.queries
+    ordered.foreach(q => Harness.run(spark, sfDir, q, "bench")(consume))
     // A query that throws records -1.0 (NOT its elapsed-to-exception
     // time): a fast failure must be distinguishable from a fast
     // success in the JSON, and min-of-passes must not launder it.
-    def steadyPass(): Seq[(String, Double)] = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { consume(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-      val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      spark.catalog.clearCache()
-      name -> dt
-    }
+    def timeOne(q: QueryDef): Double =
+      Harness.run(spark, sfDir, q, "bench")(consume).getOrElse(-1.0)
+    def steadyPass(): Seq[(String, Double)] = ordered.map(q => q.name -> timeOne(q))
     val p1 = steadyPass()
     val p2 = if (passes >= 2) steadyPass() else p1
     // Noise self-diagnosis: min-of-two cannot defend against a WHOLE
@@ -146,18 +70,14 @@ object Bench {
     // 100ms, where scheduler jitter dominates legitimately) get a
     // third timing, and their names ship in the JSON as "noisy" so a
     // reader knows which numbers carried host contention.
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { consume(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-      spark.catalog.clearCache()
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
-    val byName = ordered.toMap
+    val byName = ordered.map(q => q.name -> q).toMap
     val paired = p1.zip(p2).map { case ((n, a), (_, b)) => (n, a, b) }
-    val noisy = paired.collect {
+    val noisySpread = paired.collect {
       case (n, a, b) if a > 0 && b > 0 &&
-        math.max(a, b) / math.min(a, b) > 2.0 && math.max(a, b) > 0.1 => n
+        math.max(a, b) / math.min(a, b) > 2.0 && math.max(a, b) > 0.1 =>
+        n -> math.max(a, b) / math.min(a, b)
     }
+    val noisy = noisySpread.map(_._1)
     val third = noisy.map(n => n -> timeOne(byName(n))).toMap
     val results = paired.map { case (n, a, b) =>
       val c = third.getOrElse(n, Double.MaxValue)
@@ -176,11 +96,11 @@ object Bench {
     // the r19 driver run flagged 47 noisy queries (~1.1 KB of names),
     // which ate the shared 1850-char budget and evicted 173 of 205
     // per-query timings from the parsed line — PERF was blind to
-    // five-sixths of the registry. Capped at 5 names, the noisy field
-    // is <= ~160 chars, so the 44-query baseline subset always fits by
+    // five-sixths of the registry. Capped at the 5 widest spreads, the
+    // noisy field is <= ~160 chars, so the 44-query baseline subset always fits by
     // construction. The COMPLETE list still ships in the `detail` line
     // and the full-map file; `noisy_n` announces the true count.
-    val noisyCapped = noisy.take(5).map("\"" + _ + "\"")
+    val noisyCapped = noisySpread.sortBy(-_._2).take(5).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
     // total spans successful queries only; failed ones are the -1.0
     // entries in the per-query map (don't let them subtract from it)
@@ -204,9 +124,8 @@ object Bench {
     val lineBudget = 1850
     // both portions descending-cost so a forced truncation sheds the
     // cheapest (least informative) timings first, baseline included
-    val prioritized =
-      results.filter(r => baselineSet.contains(r._1)).sortBy(-_._2) ++
-      results.filterNot(r => baselineSet.contains(r._1)).sortBy(-_._2)
+    val (base, rest) = results.partition(r => byName(r._1).baseline)
+    val prioritized = base.sortBy(-_._2) ++ rest.sortBy(-_._2)
     def totalLine(m: Seq[(String, Double)]): String = {
       val qj = m.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + r3(v) }
         .mkString("{", ",", "}")

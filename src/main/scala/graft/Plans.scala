@@ -1,64 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Plan dump for the optimization rounds: writes `.explain("formatted")`
-  * output for named registry queries to files, one per query, under the
-  * same session config the bench uses — so the committed before/after
-  * plan artifacts (plans/rNN/<query>_{before,after}.txt) describe the
-  * exact plans the bench times. Usage:
-  *   sbt "runMain graft.Plans <outDir> <suffix> [name,name,...]"
-  * (no names = every registry query).
+  * output for registry queries to files, one per query, under the
+  * session config and pre-built artifacts the bench uses — so the
+  * committed before/after plan artifacts
+  * (plans/rNN/<query>_{before,after}.txt) describe the exact plans the
+  * bench times, not inline-rebuild shapes. Usage:
+  *   SPARK_GRAFT_ONLY=name,name sbt "runMain graft.Plans <outDir> <suffix>"
+  * (no SPARK_GRAFT_ONLY = every registry query; SPARK_GRAFT_SKIP and
+  * SPARK_GRAFT_SF_DIR apply as in Bench).
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val (outDir, suffix, only) = args match {
-      case Array(a, b)    => (a, b, None)
-      case Array(a, b, f) => (a, b, Some(f.split(",").filter(_.nonEmpty).toSet))
+    val (outDir, suffix) = args match {
+      case Array(a, b) => (a, b)
       case _ =>
-        System.err.println(
-          "usage: graft.Plans <outDir> <suffix> [name,name,...]")
+        System.err.println("usage: graft.Plans <outDir> <suffix>  " +
+          "(narrow with SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP)")
         sys.exit(2)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sel = Harness.select()
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // same pre-built artifacts as Bench: the plans must describe the
-    // artifact-served reads the bench times, not inline rebuilds.
-    // NonFatal only, and LOUD: a plan pair dumped without artifacts
-    // silently describes inline-rebuild plans — the drift this tool
-    // exists to prevent — so a failed build must be visible in the
-    // dump log.
-    def setup(name: String)(build: => Unit): Unit =
-      try build catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[plans] WARN $name failed — dumped plans " +
-          s"describe INLINE-REBUILD shapes for its queries: $e")
-      }
-    setup("ensureIvfIndex")(graft.ops.Similarity.ensureIvfIndex(spark, sfDir))
-    setup("ensureSemanticIndex")(graft.ops.Similarity.ensureSemanticIndex(spark, sfDir))
-    setup("ensureCodebook")(graft.ops.Similarity.ensureCodebook(spark, sfDir))
-    setup("ensureTrainedIvfIndex")(graft.ops.Similarity.ensureTrainedIvfIndex(spark, sfDir))
-    setup("ensureBpeModel")(graft.ops.TextAnalysis.ensureBpeModel(spark, sfDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
-      }
+    Harness.setupArtifacts(spark, sfDir, "plans")
+    val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    sel.queries.foreach(q => Harness.run(spark, sfDir, q, "plans") { df =>
+      Files.writeString(Paths.get(s"$outDir/${q.name}_$suffix.txt"),
+        df.queryExecution.explainString(mode))
+    })
     spark.stop()
   }
 }

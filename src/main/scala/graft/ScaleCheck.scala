@@ -125,14 +125,7 @@ object ScaleCheck {
     val k = args.headOption.map(_.toInt).getOrElse(4)
     val seed = "/root/testdata/sf0.1"
     val base = "/tmp/graft_scale"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // `full` additionally derives the TPC-H star schema at each scale
     // (same dirs), making /tmp/graft_scale/x{1,K} a complete sf-dir
@@ -186,12 +179,15 @@ object ScaleCheck {
     }
     if (args.contains("deriveonly")) { spark.stop(); return }
 
+    // registry queries by name; only the variants that pass
+    // non-default arguments keep their own lambdas
+    def registered(name: String) = name -> SparkEntry.queries(name)
     val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      "t01_token_stats" -> (ops.TextAnalysis.tokenStats _),
-      "d01_exact_dedup" -> (ops.Dedup.exactDedupByLang _),
-      "d04_minhash_lsh" -> ((ss: SparkSession, d: String) => ops.Dedup.minhashLshPairs(ss, d)),
-      "d05_simhash_pairs" -> ((ss: SparkSession, d: String) => ops.Dedup.simhashPairs(ss, d)),
-      "d06_embedding_neardup" -> ((ss: SparkSession, d: String) => ops.Dedup.embeddingNearDups(ss, d)),
+      registered("t01_token_stats"),
+      registered("d01_exact_dedup"),
+      registered("d04_minhash_lsh"),
+      registered("d05_simhash_pairs"),
+      registered("d06_embedding_neardup"),
       // the 12×16 default re-banded per scale by the sizedBanding rule
       // (bits tracks log₂(n), tables restores the 0.93 recall): the
       // fixed-banding row above measures the quadratic collision term
@@ -201,7 +197,7 @@ object ScaleCheck {
         val (bits, tables) = ops.Dedup.sizedBanding(embSeedRows * scaleOf(d))
         ops.Dedup.embeddingNearDups(ss, d, bits = bits, tables = tables)
       }),
-      "s02_lsh_topk" -> ((ss: SparkSession, d: String) => ops.Similarity.lshTopK(ss, d)),
+      registered("s02_lsh_topk"),
       // same treatment for top-k search: hold per-bucket occupancy at
       // ~32 so per-query candidate volume stays bounded while n grows
       "s02_lsh_topk_sized" -> ((ss: SparkSession, d: String) => {
@@ -214,50 +210,50 @@ object ScaleCheck {
       // merges components across replicas, so the round count (O(log
       // diameter)) stays FLAT while per-round work grows ×K — the
       // ratio should track K/cores, not K·rounds
-      "d07_dup_clusters" -> ((ss: SparkSession, d: String) => ops.Dedup.dupClusters(ss, d)),
-      "d08_dedup_survivors" -> ((ss: SparkSession, d: String) => ops.Dedup.dedupSurvivors(ss, d)),
+      registered("d07_dup_clusters"),
+      registered("d08_dedup_survivors"),
       // r6 curation: c01's benchmark side grows with the corpus here
       // (every replica carries a src0 slice) — a harsher test than the
       // production fixed-size benchmark, so ratio ≲ K still certifies
       // the broadcast-semi-join shape; c02's packing streams stay 5
       // langs wide while rows grow ×K (per-stream sweep cost scales)
-      "c01_contamination" -> ((ss: SparkSession, d: String) => ops.Curation.contaminationReport(ss, d)),
-      "c02_seq_packing" -> ((ss: SparkSession, d: String) => ops.Curation.packingStats(ss, d)),
+      registered("c01_contamination"),
+      registered("c02_seq_packing"),
       // s06: only replica 0 carries the seed ids, so the codebook stays
       // nlist-wide while the corpus grows ×K — the assignment scan and
       // the (cell, dim) update shuffle should both scale ~linearly
-      "s06_kmeans_codebook" -> ((ss: SparkSession, d: String) => ops.Similarity.kmeansCodebook(ss, d)),
+      registered("s06_kmeans_codebook"),
       // the composed end-to-end pipeline: one number that says the
       // whole curation chain (contaminate → dedup → split) scales
-      "c06_full_curation" -> ((ss: SparkSession, d: String) => ops.Curation.fullCurationStats(ss, d)),
+      registered("c06_full_curation"),
       // s08: per-dim stats output stays d rows while the corpus grows
       // ×K; quantize is map-side and the query set is fixed (only
       // replica 0 carries vec_id < 10), so the scored-pair count —
       // and the whole query — should scale ~linearly
-      "s08_sq_topk" -> ((ss: SparkSession, d: String) => ops.Similarity.sqTopK(ss, d)),
+      registered("s08_sq_topk"),
       // s09: the encode stage melts the corpus ×m and argmin-aggregates
       // back to one row per vector (linear); codebook and ADC tables
       // are corpus-size-independent broadcasts
-      "s09_pq_topk" -> ((ss: SparkSession, d: String) => ops.Similarity.pqTopK(ss, d)),
+      registered("s09_pq_topk"),
       // d09: probe side = docs >= 400 — under replication that is most
       // of every replica, so BOTH index and batch grow ×K: a harsher
       // setup than production (small daily batch vs big index), making
       // ~linear here a strong claim
-      "d09_incremental_dedup" -> ((ss: SparkSession, d: String) => ops.Dedup.incrementalNearDups(ss, d)),
+      registered("d09_incremental_dedup"),
       // c09: in-row window construction — the fan-out is per-doc
       // constant, so the chunk stream grows exactly ×K
-      "c09_chunking" -> ((ss: SparkSession, d: String) => ops.Curation.chunkStats(ss, d)),
+      registered("c09_chunking"),
       // c10: the budget stays FIXED while the corpus grows ×K — the
       // selected slice shrinks to the top strata but the histogram
       // pass still scans everything: cost must track the scan (~K),
       // never the boundary stratum's global-sort degenerate case
-      "c10_token_budget" -> ((ss: SparkSession, d: String) => ops.Curation.tokenBudgetStats(ss, d)),
+      registered("c10_token_budget"),
       // event ops: user population grows ×K with identical per-user
       // sequences — the per-key window/aggregation shapes should
       // absorb it linearly
-      "e02_sessions" -> (ops.Events.sessionStats _),
-      "e06_funnel" -> (ops.Events.clickPurchaseFunnel _),
-      "e07_retention" -> (ops.Events.retentionCohorts _)) ++
+      registered("e02_sessions"),
+      registered("e06_funnel"),
+      registered("e07_retention")) ++
       // the legacy 8×8 banding for contrast: same ~0.93 recall at
       // cosine 0.9 but a 2⁴× wider random funnel per table — measured
       // 14× superlinear at ×16 and 1857× at ×64 (~17 min/pass: the

@@ -1,55 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected registry query's result → parquet,
+  * plus oracle_sql.json for the same names, for the DuckDB compare
+  * (`tools/compare.py`). Usage: `Verify <sfDir> <outDir>`; a dev
+  * run narrows the dump with SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP (see
+  * [[Harness.select]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional third arg: comma-separated query names — dev-loop
-    // filter for verifying a new operator without the full dump
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, None)
-      case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
+    val (sfDir, outDir) = args match {
+      case Array(a, b) => (a, b)
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir>  " +
+          "(narrow with SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP)")
+        sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sel = Harness.select()
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // setup: persisted-artifact queries (s11 index, the trained-
-    // codebook families) read pre-built layouts; building here keeps
-    // the query runs themselves pure readers. EVERY call is guarded
-    // per-call, mirroring Bench: the r19 driver round was zeroed
-    // (CORRECTNESS_r19 = {}) because one unguarded setup failure
-    // before the first query killed the whole dump — but a failed
-    // ensure is SURVIVABLE by design (the queries rebuild their
-    // artifacts inline), so it must degrade to a logged warning, not
-    // an empty round. The list matches Bench/Plans (incl. the
-    // semantic index r19's Verify was missing).
-    def setup(name: String)(build: => Unit): Unit =
-      try build catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] WARN $name failed — affected " +
-          s"queries rebuild the artifact inline: $e")
-      }
-    setup("ensureIvfIndex")(graft.ops.Similarity.ensureIvfIndex(spark, sfDir))
-    setup("ensureSemanticIndex")(graft.ops.Similarity.ensureSemanticIndex(spark, sfDir))
-    setup("ensureCodebook")(graft.ops.Similarity.ensureCodebook(spark, sfDir))
-    setup("ensureTrainedIvfIndex")(graft.ops.Similarity.ensureTrainedIvfIndex(spark, sfDir))
-    setup("ensureBpeModel")(graft.ops.TextAnalysis.ensureBpeModel(spark, sfDir))
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    // a failed setup must degrade to a logged warning, not an empty
+    // round: the r19 gate round was zeroed (CORRECTNESS_r19 = {})
+    // because one unguarded setup failure killed the whole dump
+    Harness.setupArtifacts(spark, sfDir, "verify")
+    sel.queries.foreach(q => Harness.run(spark, sfDir, q, "verify")(
+      _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -62,8 +35,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = sel.queries.collect { case QueryDef(k, _, Some(v), _) => s"${q(k)}: ${q(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

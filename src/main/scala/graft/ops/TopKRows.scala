@@ -9,12 +9,13 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Bounded top-k state: ids/scores kept sorted by (score desc, id
-  * asc), capped at k — the EXACT insert semantics of the typed
-  * [[graft.functions.TopKAggregator]] (its sorted-`List` reduce),
-  * restated over primitive arrays so the aggregate below can read
-  * `InternalRow`s directly. The kept set (top-k by that total order)
-  * and its emitted order are unique regardless of arrival order, so
-  * the two formulations are value-identical by construction. */
+  * asc), capped at k, over primitive arrays so the aggregate below can
+  * read `InternalRow`s directly. Insert order: once k entries are
+  * held, a candidate that does not beat the k-th is dropped; otherwise
+  * it goes in front of the first entry that does not beat it, the
+  * entries behind shift back one slot, and a (k+1)-th falls off. The
+  * kept set (top-k by that total order) and its emitted order are
+  * therefore unique regardless of arrival order. */
 private[graft] final class TopKState(val k: Int) {
   var n = 0
   val ids = new Array[Long](k)
@@ -37,8 +38,8 @@ private[graft] final class TopKState(val k: Int) {
 }
 
 /** Native bounded-heap top-k aggregate — `TypedImperativeAggregate`
-  * over [[TopKState]], the kernel form of
-  * [[graft.functions.TopKAggregator]]. Input: (id LONG, score DOUBLE)
+  * over [[TopKState]], the kernel form of the typed bounded-heap
+  * `Aggregator` it replaced. Input: (id LONG, score DOUBLE)
   * child expressions; output: `array<struct<id,score>>` sorted
   * (score desc, id asc), capped at k.
   *

@@ -7,7 +7,9 @@ import org.apache.spark.sql.expressions.Aggregator
 final case class Scored(id: Long, score: Double)
 
 /** Bounded-heap top-k typed aggregate (`Aggregator[IN, BUF, OUT]`,
-  * the SURVEY §2.10 extension rung).
+  * the SURVEY §2.10 extension rung) — the test-side reference model
+  * the native [[graft.ops.TopKRowsAgg]] kernel replaced and is
+  * certified against (TopKRowsSpec, FunctionsSpec).
   *
   * The window formulation (`row_number over (partition by q order by
   * score desc)`) must SORT every candidate of a group before cutting

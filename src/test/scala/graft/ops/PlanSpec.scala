@@ -134,7 +134,7 @@ class PlanSpec extends SparkSpec {
     // the predicate reaches the SCAN (PushedFilters), so qualifying
     // candidates are selected before any join or ranking operator —
     // post-filtering a fixed-k result would show the filter ABOVE the
-    // TopKAggregator instead (the starvation trap)
+    // TopKRowsAgg instead (the starvation trap)
     assert(p.contains("EqualTo(label,2)"),
       s"label predicate must be pushed into the index scan:\n$p")
     assert(p.toLowerCase.contains("dynamicpruning"),
@@ -180,7 +180,7 @@ class PlanSpec extends SparkSpec {
   test("ANN ranking uses the bounded-heap aggregate, never a window sort") {
     // s01 keeps the window formulation as the didactic baseline; every
     // scale-path ranker (s02 LSH, s04 native, s05 IVF — including the
-    // IVF probe selection) must plan the O(k) TopKAggregator instead:
+    // IVF probe selection) must plan the O(k) TopKRowsAgg instead:
     // a per-query window sorts ALL candidates of a hot query before
     // cutting at k, which at 100 TB is a spilling sort, not a pipeline.
     Seq("s02" -> Similarity.lshTopK(spark, sf0001),

@@ -6,7 +6,9 @@ Usage: python3 tools/compare.py /tmp/verify_out /root/testdata/sf0.01
 For each query result parquet under outDir, runs the matching oracle
 SQL (outDir/oracle_sql.json) in DuckDB against the sf parquet tables,
 sorts columns by name and rows by value, and compares cell-by-cell
-(floats to 1e-9 relative, everything else exact).
+(floats to 1e-9 relative, everything else exact). An oracle name with
+no result directory (its query threw, so Verify wrote nothing) counts
+as MISSING, a fail.
 """
 import json, math, sys
 from pathlib import Path
@@ -34,6 +36,9 @@ def main(out_dir, sf_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     ok = fail = skip = 0
+    for name in sorted(set(oracle) - {p.name for p in out.iterdir() if p.is_dir()}):
+        print(f"MISSING  {name} (no result directory)")
+        fail += 1
     for qdir in sorted(p for p in out.iterdir() if p.is_dir()):
         name = qdir.name
         files = list(qdir.glob("*.parquet"))
